@@ -9,7 +9,7 @@ object Bench {
     * accumulate: every query measures standalone. A failed query records
     * -1, never a plausible partial duration. */
   private def sweep(spark: SparkSession, sfDir: String,
-                    names: Seq[String] = SparkEntry.queries.keys.toSeq.sorted): Seq[(String, Double)] =
+                    names: Seq[String]): Seq[(String, Double)] =
     names.map { name =>
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
@@ -182,9 +182,36 @@ object Bench {
       name -> (if (valid.isEmpty) -1.0 else valid.min)
     }
 
+  /** Queries the untimed sf0.001 warm-up compiles. A full-surface run
+    * with a cache sized for the surface warms every query; a small cache
+    * (< 4096 entries) would thrash, so it warms a representative list
+    * instead. A run restricted to named queries warms exactly those.
+    * Exposed for BenchSpec. */
+  private[graft] def warmNames(selected: Seq[String], fullSurface: Boolean,
+                               codegenCache: String): Seq[String] =
+    if (!fullSurface || scala.util.Try(codegenCache.toInt).getOrElse(0) >= 4096) selected
+    else Seq(
+      "q01_pricing_summary", "q06_dim_join_left", "q09_topk_peak",
+      "q10_minute_counts", "q16_topn_per_group", "q19_json_props",
+      "q21_token_stats", "q25_minhash_pairs", "q27_knn_cosine",
+      "q31_binary_meta", "q38_approx_sketches", "q50_seq_packing",
+      "q83_bpe_vocab", "q94_pii_redact", "q113_funnel")
+      .filter(SparkEntry.queries.contains)
+
+  /** Where the JSON record goes. Only a full-surface run refreshes the
+    * committed record `perf/bench_last.json`; a run over named queries
+    * writes `target/bench.json` alone. The last path is the one the
+    * summary line cites. Exposed for BenchSpec. */
+  private[graft] def artifactPaths(fullSurface: Boolean): Seq[String] =
+    "target/bench.json" +: (if (fullSurface) Seq("perf/bench_last.json") else Nil)
+
+  /** `runMain graft.Bench [queryPrefix...]`: no prefixes times the full
+    * surface; prefixes time only the queries whose names start with one
+    * (two sweeps, per-query minimum, as for the full surface). */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val names = SparkEntry.select(args.toSeq)
+    val fullSurface = args.isEmpty
     // Generated-class cache sized for the surface (round 15). The default
     // (spark.sql.codegen.cache.maxEntries = 100) holds ~15 queries' worth
     // of whole-stage/expression classes, so by the time sweep 2 reaches a
@@ -199,13 +226,8 @@ object Bench {
     // Scale-independent (a cluster driver compiles the same classes), and
     // parameterised: SPARK_GRAFT_CODEGEN_CACHE overrides, 0 disables.
     val codegenCache = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "32768")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", codegenCache)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench",
+      "spark.sql.codegen.cache.maxEntries" -> codegenCache)
     // warm the session so the first query of the first sweep doesn't absorb
     // FileIndex/parquet-reader startup cost on top of its own codegen
     try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -222,25 +244,13 @@ object Bench {
     // the warm sweep 2 — right at the 1.4 contention threshold on an
     // idle host). Generated source is scale-independent for all but the
     // few corpus-parameter-derived plans (banded LSH tables), so sf0.001
-    // warming covers the sf0.1/sf1 sweeps. A small cache (env override
-    // < 4096) falls back to the old representative list — full-surface
-    // warming would thrash such a cache.
+    // warming covers the sf0.1/sf1 sweeps (see warmNames).
     val warmDir = {
       val sib = java.nio.file.Paths.get(sfDir).toAbsolutePath.resolveSibling("sf0.001")
       if (java.nio.file.Files.isDirectory(sib)) sib.toString else sfDir
     }
-    val warmNames =
-      if (scala.util.Try(codegenCache.toInt).getOrElse(0) >= 4096)
-        SparkEntry.queries.keys.toSeq.sorted
-      else Seq(
-        "q01_pricing_summary", "q06_dim_join_left", "q09_topk_peak",
-        "q10_minute_counts", "q16_topn_per_group", "q19_json_props",
-        "q21_token_stats", "q25_minhash_pairs", "q27_knn_cosine",
-        "q31_binary_meta", "q38_approx_sketches", "q50_seq_packing",
-        "q83_bpe_vocab", "q94_pii_redact", "q113_funnel")
-        .filter(SparkEntry.queries.contains)
     val warmStart = System.nanoTime()
-    sweep(spark, warmDir, warmNames)
+    sweep(spark, warmDir, warmNames(names, fullSurface, codegenCache))
     // Warm the PERSISTED derivation stores for the bench corpus itself
     // (cluster table, PCA model, k-means model): each is a pure
     // once-per-corpus derivation that every later query/session loads,
@@ -300,7 +310,7 @@ object Bench {
     // data-cold (cache cleared between queries) while filtering one-sided
     // noise; it is the steady-state cost a resident engine would show.
     val sweepStart = System.nanoTime()
-    val first = sweep(spark, sfDir)
+    val first = sweep(spark, sfDir, names)
     val firstWallSec = (System.nanoTime() - sweepStart) / 1e9
     // wall-clock guard: when the host is badly contended the first sweep
     // alone can run minutes over its normal cost; a full second sweep
@@ -322,7 +332,7 @@ object Bench {
     // min-of-two total, so 3× flags only genuine host noise), with a
     // 300 s floor for scales without a committed record. The env var
     // stays an explicit override.
-    val steady = loadSteadyState(sfDir)
+    val steady = loadSteadyState(sfDir).filter { case (n, _) => names.contains(n) }
     val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET").map(_.toDouble)
       .getOrElse {
         val steadySum = steady.values.filter(_ > 0).sum
@@ -331,7 +341,7 @@ object Bench {
     val contended = firstWallSec > budgetSec
     val sweep2Start = System.nanoTime()
     val second: Map[String, Double] =
-      (if (!contended) sweep(spark, sfDir)
+      (if (!contended) sweep(spark, sfDir, names)
        else partialSweep(spark, sfDir, first, capSec = budgetSec / 2, steady)).toMap
     val secondWallSec = (System.nanoTime() - sweep2Start) / 1e9
     // a sweep-1/sweep-2 wall ratio > 1.4 is itself a contention signature
@@ -370,7 +380,7 @@ object Bench {
     // (BENCH_r01-r07 all carry "parsed": null). Write the full JSON to a
     // TRACKED path too — perf/ is committed, target/ is gitignored — so
     // every per-query number the round-end records cite exists in-tree.
-    for (p <- Seq("target/bench.json", "perf/bench_last.json")) {
+    for (p <- artifactPaths(fullSurface)) {
       val out = java.nio.file.Paths.get(p)
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out, line.getBytes("UTF-8"))
@@ -388,7 +398,7 @@ object Bench {
         s""""contended":$contendedOut,"sweep1_wall_sec":$firstWallSec,""" +
         s""""sweep2_wall_sec":$secondWallSec,""" +
         s""""n_burst_suspects":${suspects.size},"sf":"$sfDir",""" +
-        s""""detail":"perf/bench_last.json"}"""
+        s""""detail":"${artifactPaths(fullSurface).last}"}"""
     println(summary)
     // the driver parses the tail of stdout: make sure both JSON lines
     // are flushed before sbt's own trailer lands (round-16 verdict

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: dump formatted physical plans for representative queries so
   * pushdown / broadcast / codegen can be audited (`sbt "runMain
   * graft.PlanAudit [query...]"`). */
@@ -8,14 +7,10 @@ object PlanAudit {
     // bench-condition overrides (round 15): plan shape depends on the data
     // scale (file sizes drive broadcast estimates and the FanOut split
     // heuristic) and the core count, so committed plan artifacts must be
-    // captured at the same sfDir/cpus the bench runs — the old hardcoded
-    // local[4]/sf0.01 stays the default for quick interactive audits
+    // captured at the bench's data directory and core count; sf0.01
+    // stays the default for quick interactive audits
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local("graft-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     // flags are stripped BEFORE the empty-check so `-executed` alone
     // still audits the default queries

@@ -1,30 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (tools/check_oracle.py).
+  * `runMain graft.Verify <sfDir> <outDir> [queryPrefix...]` */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // dev-only subset filter (comma-separated name prefixes); the driver
-    // never sets it, so the default remains the full surface
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only match {
-      case Some(ps) => SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
-      case None     => SparkEntry.queries
+    val (sfDir, outDir, prefixes) = args.toSeq match {
+      case sf +: out +: ps => (sf, out, ps)
+      case _ => sys.error("usage: Verify <sfDir> <outDir> [queryPrefix...]")
     }
+    val spark = GraftSession.local("graft-verify")
+    new java.io.File(outDir).mkdirs()
+    // optional subset by name prefix; with none, the full surface
+    val selected = SparkEntry.select(prefixes)
     val schemas = scala.collection.mutable.Map.empty[String, org.apache.spark.sql.types.StructType]
-    selected.foreach { case (name, fn) =>
+    selected.foreach { name =>
+      val fn = SparkEntry.queries(name)
       // scoped: operator-staged frames (posting lists, signature sets)
       // release after each query's write, so the dump holds no net cache
       try graft.ops.Staged.scoped {

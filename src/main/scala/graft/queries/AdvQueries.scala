@@ -9,8 +9,7 @@ import graft.ops.{AsOf, Bpe, Classify, Dedup, Exact, Layout, Normalize, RangeJoi
 /** Advanced relational surface: as-of join, rollup, conditional pivot,
   * exact distinct counts, exact-arithmetic correlation. All oracle-backed.
   */
-object AdvQueries {
-  type Q = (SparkSession, String) => DataFrame
+object AdvQueries extends QueryWave {
 
   /** As-of join: each purchase enriched with the user's most recent view
     * value at-or-before the purchase time (oracle: DuckDB ASOF LEFT JOIN).

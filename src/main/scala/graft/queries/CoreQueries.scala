@@ -12,9 +12,8 @@ import graft.ops.{Derive, Enrich, Exact, Quality, Windows}
   * [[graft.ops.Exact]] (decimal-exact, engine-order-independent); integer
   * results are cast so Spark and DuckDB agree on width.
   */
-object CoreQueries {
+object CoreQueries extends QueryWave {
 
-  type Q = (SparkSession, String) => DataFrame
 
   /** TPC-H Q1-shaped pricing summary — grouped sum/avg/count over lineitem
     * (A-family aggregates, P4 aliasing; ref agg shape

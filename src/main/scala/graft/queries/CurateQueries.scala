@@ -10,8 +10,7 @@ import graft.ops.{Curate, Sampling, Text}
   * bucketing. Every entry is fully oracle-checkable — the operators are
   * built from engine-portable expressions (shared regex subset, md5
   * thresholds, decimal rounding) precisely so DuckDB can replay them. */
-object CurateQueries {
-  type Q = (SparkSession, String) => DataFrame
+object CurateQueries extends QueryWave {
 
   /** PII redaction ([[Curate.redactPii]]). The synthetic corpus carries
     * no PII, so the query plants deterministic email/phone/IPv4 strings

@@ -11,8 +11,7 @@ import graft.ops.{Dedup, Exact, Multimodal, Packing, Quality, Sampling, Similari
   * operators (minhash, simhash, LSH kNN, winnowing) are rows-only checked
   * and covered by ScalaTest instead.
   */
-object ExtQueries {
-  type Q = (SparkSession, String) => DataFrame
+object ExtQueries extends QueryWave {
 
   /** Exact dedup groups by content hash (survivor id + copy count). */
   private val q20: Q = (s, d) => {

@@ -11,8 +11,7 @@ import graft.ops.{Bpe, Dedup, Similarity, Sketches, Text}
   * per-language tokenizer fertility. All but fertility (iterative BPE —
   * not SQL-expressible, golden-pinned) are DuckDB-oracle-checked via the
   * repo's engine-portable md5/decimal discipline. */
-object ExtraQueries {
-  type Q = (SparkSession, String) => DataFrame
+object ExtraQueries extends QueryWave {
 
   /** The synthetic corpus has zero exact duplicates at small SF, so the
     * duplication queries plant them deterministically (q94's precedent for

@@ -9,8 +9,7 @@ import graft.ops.{Dedup, Similarity, Windows}
   * top session paths, contrastive triplet mining, a Jaccard-threshold
   * sweep, and time-to-conversion survival summaries. All five are
   * DuckDB-oracle-checked. */
-object Wave10Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave10Queries extends QueryWave {
 
   /** q151/q155/q159's planted corpus — shared so the graph family reads
     * one structure. */

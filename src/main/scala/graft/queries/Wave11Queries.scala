@@ -8,8 +8,7 @@ import graft.ops.{Dedup, Text}
 /** Round-9 eleventh-wave queries: a per-column null/distinct profiler,
   * cross-language duplication detection, and the dedup token-gain
   * report. All DuckDB-oracle-checked. */
-object Wave11Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave11Queries extends QueryWave {
 
   private val profileCols = Seq("event_id", "ts", "user_id", "event_type",
     "value", "props")

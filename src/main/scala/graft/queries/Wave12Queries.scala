@@ -8,8 +8,7 @@ import graft.ops.{Dedup, Graph}
 /** Round-9 wave-14 queries: triangle/clustering structure of the
   * duplication graph, an A/B lift report with Welch statistics, and
   * seasonal-baseline anomaly detection. All DuckDB-oracle-checked. */
-object Wave12Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave12Queries extends QueryWave {
 
   /** Triangle census of the rare-tile duplication graph
     * ([[Graph.triangles]] over [[Dedup.rareTilePairs]], q155's planted

@@ -8,8 +8,7 @@ import graft.ops.{Dedup, Graph}
 /** Round-9 wave-15 queries: behavioral segment overlap, k-core of the
   * duplication graph, and the corpus novelty curve over ingestion
   * batches. All DuckDB-oracle-checked. */
-object Wave13Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave13Queries extends QueryWave {
 
   /** Segment overlap matrix: exact user-set Jaccard between every pair
     * of event types — the audience-overlap read behind mixture and

@@ -8,8 +8,7 @@ import graft.ops.{Dedup, Graph, Text}
 /** Round-9 wave-16 queries: link prediction over the duplication graph,
   * token burst detection across ingestion batches, and hub-removal
   * ablation of the dedup cluster structure. All DuckDB-oracle-checked. */
-object Wave14Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave14Queries extends QueryWave {
 
   private def plantedDocs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

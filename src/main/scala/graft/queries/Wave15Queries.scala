@@ -9,8 +9,7 @@ import graft.ops.Text
 /** Round-9 wave-17 queries: exact Kolmogorov–Smirnov length drift per
   * source and bigram conditional entropy per language. Both
   * DuckDB-oracle-checked. */
-object Wave15Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave15Queries extends QueryWave {
 
   private val d189 = org.apache.spark.sql.types.DecimalType(18, 9)
 

@@ -9,8 +9,7 @@ import graft.ops.{Ranking, Text}
 /** Round-9 wave-18 query: reciprocal-rank fusion of two lexical
   * retrieval runs — the hybrid-search combiner. DuckDB-oracle-checked
   * end-to-end (both input rankings replayed, then the fusion). */
-object Wave16Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave16Queries extends QueryWave {
 
   /** RRF fusion ([[Ranking.rrfFuse]]) of q154's BM25 top-10 with a
     * plain term-frequency top-10 over the SAME query set — the exact

@@ -10,8 +10,7 @@ import graft.ops.{Dedup, Funnel, Text}
   * Dirichlet prior), duplicate-cluster composition/purity, and the
   * stationary distribution of the event-type Markov chain. All
   * DuckDB-oracle-checked. */
-object Wave17Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave17Queries extends QueryWave {
 
   private val D2812 = "decimal(28,12)"
 

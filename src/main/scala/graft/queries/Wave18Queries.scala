@@ -9,8 +9,7 @@ import graft.ops.Text
 /** Round-9 wave-20 queries: token-mass concentration (Gini) across
   * sources and a Benford first-digit conformance check. Both
   * DuckDB-oracle-checked. */
-object Wave18Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave18Queries extends QueryWave {
 
   /** Token-mass concentration per language: the Gini coefficient of
     * token counts across that language's sources — the one-number

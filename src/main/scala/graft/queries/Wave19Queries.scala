@@ -9,8 +9,7 @@ import graft.ops.Exact
 /** Round-9 wave-21 queries: inter-event gap (think-time) histogram on
   * log2 buckets and the top-decile value-concentration (Pareto) report.
   * Both DuckDB-oracle-checked. */
-object Wave19Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave19Queries extends QueryWave {
 
   /** Log2 bucket boundaries for gaps up to ~2^26 s (~2 years); the
     * CASE ladder is generated from the SAME literals in both engines —

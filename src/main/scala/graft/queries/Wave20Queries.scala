@@ -28,8 +28,7 @@ import graft.Tables
   * iterative fit (25 jobs / 10 scans at sf1) to a few-KB parquet read.
   * Golden-pinned (iterative fits have no SQL form; loaded and fitted
   * models are bit-identical, so the goldens pin BOTH paths). */
-object Wave20Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave20Queries extends QueryWave {
 
   /** Cluster-size histogram: how much of the corpus sits in pairs vs
     * deep template families — the first chart of any dedup review (a

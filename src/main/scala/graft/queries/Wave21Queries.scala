@@ -14,8 +14,7 @@ import graft.ops.{Curate, Packing, Sampling, Text}
   * matrix (which Gopher rule is load-bearing vs redundant), and the
   * split-representativeness check (is val/test distributionally like
   * train AFTER leakage-free splitting). All DuckDB-oracle-checked. */
-object Wave21Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave21Queries extends QueryWave {
 
   /** Context-length truncation loss ([[Packing.truncationReport]]):
     * for each candidate max_seq_len, documents truncated and corpus

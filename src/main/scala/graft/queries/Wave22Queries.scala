@@ -14,8 +14,7 @@ import graft.ops.Text
   * containment matrix (who syndicates from whom), the quality impact of
   * survivor-policy dedup per source, and the language-ID confusion
   * matrix against the labeled corpus. All DuckDB-oracle-checked. */
-object Wave22Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave22Queries extends QueryWave {
 
   /** Directional source→source content containment: for every ordered
     * source pair, |shingles(A) ∩ shingles(B)| / |shingles(A)| over

@@ -15,8 +15,7 @@ import graft.ops.{Dedup, Graph, Similarity}
   * regularity (the bot-traffic screen), and kNN hubness (the embedding
   * pathology that silently degrades ANN retrieval). All
   * DuckDB-oracle-checked. */
-object Wave23Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave23Queries extends QueryWave {
 
   /** Newman modularity of q159's label-propagation communities over the
     * same duplication graph: per community — nodes, internal directed

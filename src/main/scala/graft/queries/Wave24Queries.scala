@@ -15,8 +15,7 @@ import graft.ops.{Dedup, Similarity}
   * against exact Jaccard truth, and PQ quantization distortion per
   * subspace. q206 is DuckDB-oracle-checked; q207/q208 are golden-pinned
   * (seeded xxhash64 signatures / Lloyd codebooks have no SQL form). */
-object Wave24Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave24Queries extends QueryWave {
 
   /** Latest-wins upsert compaction over the events log, keyed by
     * (user_id, event_type) with (ts, event_id) as the version order —

@@ -14,8 +14,7 @@ import graft.ops.Similarity
   * uniformity check), a per-source charset/noise profile, and RFM
   * customer segmentation. q210/q211 are DuckDB-oracle-checked; q209 is
   * golden-pinned (Lloyd centroids have no SQL form). */
-object Wave25Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave25Queries extends QueryWave {
 
   /** IVF cell-balance report: vectors per cell and the load factor vs a
     * uniform split — the check an ANN deployment runs before trusting

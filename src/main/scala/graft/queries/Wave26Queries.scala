@@ -14,8 +14,7 @@ import graft.Tables
   * broadcast/partial-agg plan a 100 TB fact table needs: shipping
   * priority (TPC-H Q3's shape), per-brand supplier concentration, and
   * market-segment seasonality. All DuckDB-oracle-checked. */
-object Wave26Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave26Queries extends QueryWave {
 
   private val D = "decimal(28,12)"
   private val cutoff = "1998-06-01"

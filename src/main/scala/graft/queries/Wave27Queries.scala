@@ -14,8 +14,7 @@ import graft.Tables
   * nation×nation trade-flow matrix (TPC-H Q7's shape), and CUBE
   * multi-dimensional rollups with grouping ids. All
   * DuckDB-oracle-checked. */
-object Wave27Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave27Queries extends QueryWave {
 
   private val D = "decimal(28,12)"
 

@@ -14,8 +14,7 @@ import graft.ops.Exact
   * Q10's shape), the small-quantity correlated-aggregate filter (Q17's
   * decorrelation shape), and year-over-year revenue growth per nation.
   * All DuckDB-oracle-checked. */
-object Wave28Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave28Queries extends QueryWave {
 
   /** Returned-item revenue top-20 customers (TPC-H Q10's shape): which
     * accounts drive the most returned value. The fact side filters on

@@ -18,8 +18,7 @@ import graft.ops.{Dedup, Exact, Text}
   * leakage, and training-sequence packing stats extend the LLM
   * data-pipeline family. All DuckDB-oracle-checked except q228
   * (seeded-xxhash64 MinHash → golden-pinned). */
-object Wave29Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave29Queries extends QueryWave {
 
   private val Dec = "decimal(28,12)"
 

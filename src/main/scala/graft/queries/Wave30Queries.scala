@@ -16,8 +16,7 @@ import graft.ops.Exact
   * diversity) plus a rolling-window revenue trend and a deterministic
   * stratified-sampling audit for the curation family. All
   * DuckDB-oracle-checked. */
-object Wave30Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave30Queries extends QueryWave {
 
   /** Top-5 parts per supplier nation by shipped revenue (TPC-H Q11's
     * "important stock" question, rank-based so the cut is scale-stable —

@@ -17,8 +17,7 @@ import graft.ops.Dedup
   * truth, and sequence-packing language diversity (the shuffling-
   * quality signal for LLM training batches). q240 is golden-pinned
   * (seeded xxhash64); the rest are DuckDB-oracle-checked. */
-object Wave31Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave31Queries extends QueryWave {
 
   /** Day-of-week seasonal decomposition of 1997 daily revenue: each
     * day's residual against its weekday mean, headlined by the top-10

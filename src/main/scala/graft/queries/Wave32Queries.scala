@@ -15,8 +15,7 @@ import graft.ops.{Dedup, Text}
   * directional source-flow matrix (who kills whom), and the end-to-end
   * curation-funnel observability table (survivors per pipeline stage).
   * All DuckDB-oracle-checked. */
-object Wave32Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave32Queries extends QueryWave {
 
   private val sweep = Seq(0.3, 0.5, 0.7, 0.9)
 

@@ -17,8 +17,7 @@ import graft.ops.Dedup
   * consumer of the media store's frame table, and the confusion matrix
   * over the persisted centroid-score store. All eight are
   * DuckDB-oracle-checked. */
-object Wave33Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave33Queries extends QueryWave {
 
   /** TPC-H Q6 analog: forecast-revenue-change — the discount revenue of
     * 1997 shipments in the 0.05–0.07 band below quantity 24. One

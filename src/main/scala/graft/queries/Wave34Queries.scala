@@ -17,8 +17,7 @@ import graft.ops.{Sampling, Text}
   * mass Jaccard can't see. Every query is a filter/join over a store
   * scan plus a bounded rollup — no pair machinery re-runs. All five are
   * DuckDB-oracle-checked. */
-object Wave34Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave34Queries extends QueryWave {
 
   /** Containment drop policy: a doc is dropped when ≥ 0.9 of its
     * 3-gram set lives inside a LARGER doc (by distinct-shingle count;

@@ -21,8 +21,7 @@ import graft.Tables
   * this surface. Revenue/profit sums ride the scaled-long
   * exact-aggregation discipline ([[graft.ops.Exact]] rationale); every
   * query ends in a total ORDER BY. All seven are DuckDB-oracle-checked. */
-object Wave35Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave35Queries extends QueryWave {
 
   /** TPC-H Q2 analog: cheapest EUROPE supplier per mid-size STANDARD
     * part. No partsupp table in this fixture, so supply cost is the

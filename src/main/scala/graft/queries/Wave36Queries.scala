@@ -18,8 +18,7 @@ import graft.ops.{Curate, Sampling, Text}
   * front-loaded?), and the dedup-victim quality-bias audit (does
   * near-dup dedup preferentially remove low-quality docs?). All five
   * are DuckDB-oracle-checked. */
-object Wave36Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave36Queries extends QueryWave {
 
   private val splitDefs = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
 

@@ -22,8 +22,7 @@ import graft.ops.{Curate, Ranking, Sampling, Text}
   * docs also the high-quality ones — the question that decides whether
   * decontamination costs eval difficulty). All five are
   * DuckDB-oracle-checked. */
-object Wave37Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave37Queries extends QueryWave {
 
   private val splitDefs = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
 

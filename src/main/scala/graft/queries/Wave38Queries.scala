@@ -18,8 +18,7 @@ import graft.Tables
   * business key or runs over a bounded histogram/dimension frame —
   * never an unpartitioned per-row sort. All five are
   * DuckDB-oracle-checked. */
-object Wave38Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave38Queries extends QueryWave {
 
   /** Gaps-and-islands: the longest streak of consecutive calendar
     * months with ≥1 order, per customer, rolled up to a streak-length

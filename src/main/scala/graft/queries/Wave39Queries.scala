@@ -16,8 +16,7 @@ import graft.Tables
   * vocabulary-concentration table a tokenizer budget is chosen from),
   * and the cross-table engagement↔spend correlation over the shared
   * user/customer key space. All five are DuckDB-oracle-checked. */
-object Wave39Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave39Queries extends QueryWave {
 
   /** l-diversity audit: within each (lang, source) quasi-identifier
     * cell, how many DISTINCT sensitive values (the embedding label via

@@ -9,8 +9,7 @@ import graft.ops.{Curate, Dedup, Funnel, Incremental, Similarity, Text}
   * retention), PMI collocations, int8 quantization planning, and
   * incremental delta-vs-base dedup. All five are DuckDB-oracle-checked —
   * the md5/decimal/floor discipline keeps every expression engine-exact. */
-object Wave3Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave3Queries extends QueryWave {
 
   /** Ordered funnel over the event stream ([[Funnel.funnel]]):
     * view → click → purchase, strictly increasing timestamps per user.

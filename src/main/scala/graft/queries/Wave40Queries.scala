@@ -19,8 +19,7 @@ import graft.ops.{Sampling, Text}
   * split churn under re-salting (how much of the corpus changes split
   * when the assignment key rotates). All four are
   * DuckDB-oracle-checked. */
-object Wave40Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave40Queries extends QueryWave {
 
   /** Shingle document-frequency profile: 3-gram postings bucketed by
     * ⌊log₂ df⌋ — n_shingles, posting mass, and mass share per bucket.

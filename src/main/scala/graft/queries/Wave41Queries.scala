@@ -17,8 +17,7 @@ import graft.ops.Text
   * week-over-week active-user retention, and the least-squares
   * quantity-on-discount slope per return flag (the elasticity
   * read). All four are DuckDB-oracle-checked. */
-object Wave41Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave41Queries extends QueryWave {
 
   /** Representative-selection policy comparison: for the θ=0.5
     * near-dup clusters (singletons = their own cluster), the corpus

@@ -13,8 +13,7 @@ import graft.Tables
   * salted ≡ plain, unsafe-join-type rejection) but no oracle-checked
   * query — and result-identity to the plain join is precisely the
   * property a DuckDB oracle can hash-check end-to-end. */
-object Wave42Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave42Queries extends QueryWave {
 
   /** Segment revenue through the SALTED join: the events fact side
     * (user_id is this fixture's measured hot key — q135) joins the

@@ -21,8 +21,7 @@ import graft.ops.{Exact, Windows}
   * how 30 is CHOSEN), and the minute-resolution peak-concurrency read
   * (capacity planning over session intervals without an interval
   * self-join). All five are DuckDB-oracle-checked. */
-object Wave43Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave43Queries extends QueryWave {
 
   /** Edit-distance verification of near-dup candidates: the exact
     * character-level stage a production dedup cascade runs AFTER the

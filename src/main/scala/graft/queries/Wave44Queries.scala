@@ -20,8 +20,7 @@ import graft.ops.{Curate, Exact, Similarity, Text}
   * cosine null model that calibrates every similarity threshold, and
   * daily-revenue autocorrelation at the business lags. All five are
   * DuckDB-oracle-checked. */
-object Wave44Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave44Queries extends QueryWave {
 
   /** Exact ROC-AUC of the continuous quality score (q120/q22's formula)
     * as a predictor of the gopher-gate verdict (q96's label) — the

@@ -22,8 +22,7 @@ import graft.ops.Text
   * PMI over-ranks rare pairs, G² does not), and per-type arrival-rate
   * quantiles (the capacity input behind q298's concurrency peak).
   * All five are DuckDB-oracle-checked. */
-object Wave45Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave45Queries extends QueryWave {
 
   /** Degree assortativity of the θ≥0.3 near-dup graph: exact Pearson
     * correlation of endpoint degrees over the directed edge list (each

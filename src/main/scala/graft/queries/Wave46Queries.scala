@@ -19,8 +19,7 @@ import graft.Tables
   * years (do the top sellers stay the top sellers), and the cohort
   * LTV curve (q114 counts retained users; this accumulates their
   * value). All five are DuckDB-oracle-checked. */
-object Wave46Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave46Queries extends QueryWave {
 
   /** One-way ANOVA of order value across day-of-week groups: the
     * F-statistic that says whether q237's day-of-week revenue table

@@ -17,8 +17,7 @@ import graft.Tables
   * encoding audit (per-column cardinality → bits-per-value estimate —
   * the storage-planning read behind parquet encoding choices). All
   * three are DuckDB-oracle-checked. */
-object Wave47Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave47Queries extends QueryWave {
 
   /** Generalization ladder: re-identification risk of the
     * (lang, source, n_chars) quasi-identifier at three n_chars

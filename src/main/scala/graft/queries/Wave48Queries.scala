@@ -17,8 +17,7 @@ import graft.Tables
   * q295's zone-map prune rates), and the join fan-out audit (the
   * pre-join skew read that says whether q293's salting is needed).
   * All three are DuckDB-oracle-checked. */
-object Wave48Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave48Queries extends QueryWave {
 
   /** CBO estimation-error audit: the textbook equi-join cardinality
     * estimate — per key-range bucket, |L|·|R| / max(d_L, d_R) under

@@ -17,8 +17,7 @@ import graft.Tables
   * schema profile (which JSON keys actually occur, per event type —
   * the schema a `props` column implies but never declares). All three
   * are DuckDB-oracle-checked. */
-object Wave49Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave49Queries extends QueryWave {
 
   /** Approximate functional-dependency discovery: for each directed
     * column pair A→B, the strength Σ_a max_b n(a,b) / N — the share of

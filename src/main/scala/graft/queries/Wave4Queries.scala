@@ -10,8 +10,7 @@ import graft.ops.{Classify, Diagnostics, Funnel, Linkage, Similarity, Text}
   * evaluation (per-class P/R/F1), code-switch detection, mutual top-1
   * neighbor mining, join-key skew diagnostics, and Cohen's kappa
   * inter-annotator agreement. All seven are DuckDB-oracle-checked. */
-object Wave4Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave4Queries extends QueryWave {
 
   /** The deterministic dirty-record drop q130 links back to the part
     * master: token swaps (normal form absorbs), case noise (normal form

@@ -36,8 +36,7 @@ import graft.Tables
   * Quantization is floor-on-scaled (never round(): Spark HALF_UP on
   * the shortest decimal form vs DuckDB exact-binary — the q299/q309
   * hazard class). All five are DuckDB-oracle-checked. */
-object Wave50Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave50Queries extends QueryWave {
 
   /** Tie-aware value histogram of the two-sample event slice: per
     * distinct value, total count, group-1 count, and the cumulative

@@ -34,8 +34,7 @@ import graft.Tables
   * collapsed histogram frames, no order-dependent float reduction
   * (q330's pseudo-values quantize to micro-units BEFORE the
   * cross-month moments). All five are DuckDB-oracle-checked. */
-object Wave51Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave51Queries extends QueryWave {
 
   /** Equi-depth 16-bucket histogram of l_extendedprice with per-bucket
     * NDV — the optimizer statistic. Buckets assign on the exact

@@ -35,8 +35,7 @@ import graft.Tables
   * correctly-rounded in both engines where pow() is not — and
   * floor-on-scaled quantization everywhere. All five
   * DuckDB-oracle-checked. */
-object Wave52Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave52Queries extends QueryWave {
 
   /** Simpson's-paradox audit: sign of the discount↔quantity covariance
     * overall vs within each l_returnflag stratum. Covariance assembles

@@ -32,8 +32,7 @@ import graft.Tables
   * floor-to-long BEFORE any cross-row float reduction (residuals,
   * log-order-stats, squared deviations), DECIMAL(38,0) for the
   * integer-valued big squares. All five DuckDB-oracle-checked. */
-object Wave53Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave53Queries extends QueryWave {
 
   /** Seasonal strength of daily revenue: 1 − Var(residual)/Var(total)
     * after removing day-of-week means. Residuals floor-quantize to

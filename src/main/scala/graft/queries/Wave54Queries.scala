@@ -32,8 +32,7 @@ import graft.Tables
   * 1e-12, ln() at 1e-9, z-gaps at 1e-9, ratios at 1e-6), DECIMAL(38,0)
   * for integer-valued big squares, floor-on-scaled output grids. All
   * five DuckDB-oracle-checked. */
-object Wave54Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave54Queries extends QueryWave {
 
   /** Good–Turing mass estimates from the frequency-of-frequencies
     * table of word TRIGRAMS (the fixtures' unigram vocabulary is a

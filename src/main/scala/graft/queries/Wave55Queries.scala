@@ -32,8 +32,7 @@ import graft.Tables
   * longs, logprobs to 1e-9), explicit pivot sums for tiny cross-group
   * reductions, one deterministic double formula per output row. All
   * five DuckDB-oracle-checked. */
-object Wave55Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave55Queries extends QueryWave {
 
   /** Friedman blocked rank test: months are blocks, day-of-week the
     * treatment, mean daily revenue the response. Within-block average

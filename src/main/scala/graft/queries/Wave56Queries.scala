@@ -27,8 +27,7 @@ import graft.Tables
   * cross-row reductions (absolute forecast errors are integer cents
   * by construction), floor-on-scaled output grids. All three
   * DuckDB-oracle-checked. */
-object Wave56Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave56Queries extends QueryWave {
 
   /** Cohen's d (pooled SD) and Hedges' g (small-sample corrected,
     * J ≈ 1 − 3/(4·df − 1)) for purchase vs view event values. All

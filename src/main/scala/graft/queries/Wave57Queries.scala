@@ -28,8 +28,7 @@ import graft.ops.Text
   * divisions (`(2·s·10^k + d) div (2·d)`) unscaled from grids that are
   * exactly representable in double — no wide-decimal→double cast
   * anywhere, so Spark and DuckDB agree to the bit at any scale. */
-object Wave57Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave57Queries extends QueryWave {
 
   /** Exact integer HALF_UP division num/den at 10^k fractional digits,
     * computed entirely on decimals, unscaled by an exact double cast of

@@ -27,8 +27,7 @@ import graft.ops.{Similarity, Text}
   * formulas over exactly-representable integer operands; percentiles
   * use the engine-matched percentile ↔ quantile_cont pair (q54's
   * precedent). */
-object Wave58Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave58Queries extends QueryWave {
 
   /** Stopword-profile cosine between source pairs: per source, the
     * 10-dimensional raw count vector of [[Text.stopwords]] occurrences

@@ -13,8 +13,7 @@ import graft.ops.{Classify, Dedup, Kmeans, Ranking, Similarity, Text}
   * boilerplate measurement. All DuckDB-oracle-checked except the
   * iterative k-means fit (golden-pinned, [[graft.ops.Pca]]'s
   * precedent). */
-object Wave6Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave6Queries extends QueryWave {
 
   /** The deterministic 3-annotator frame q143/q145 share: annotator `a`
     * is the corpus lang label; `b` disagrees on every 6th doc (q136's

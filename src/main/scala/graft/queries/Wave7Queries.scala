@@ -10,8 +10,7 @@ import graft.ops.{Classify, Dedup, Funnel, Kmeans, Ranking, Sampling, Similarity
   * first-/last-touch conversion attribution, stride-scheduled
   * curriculum ordering, and duplication-hub diagnostics. All
   * DuckDB-oracle-checked except q148 (golden-pinned k-means fit). */
-object Wave7Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave7Queries extends QueryWave {
 
   /** Accuracy-weighted re-vote ([[Classify.weightedVoteReport]]) over
     * the shared 3-annotator frame: per label, units won under plain

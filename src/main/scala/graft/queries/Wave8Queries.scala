@@ -9,8 +9,7 @@ import graft.ops.{Curate, Dedup, Graph, Ranking, Similarity, Text}
   * authority over the duplication graph, Flesch readability gating,
   * hard-negative mining for contrastive training, and winsorized
   * robust means. All five are DuckDB-oracle-checked. */
-object Wave8Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave8Queries extends QueryWave {
 
   private val bm25K1 = 1.2
   private val bm25B = 0.75

@@ -9,8 +9,7 @@ import graft.ops.{Dedup, Graph, Sampling, Text, Windows}
   * the duplication graph, exponentially time-decayed means, suffix→
   * prefix stitch detection, dedup-discounted effective token yield, and
   * UniMax mixture allocation. All five are DuckDB-oracle-checked. */
-object Wave9Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave9Queries extends QueryWave {
 
   /** Label propagation ([[Graph.labelPropagate]]) over q155's planted
     * duplication graph: docs with `doc_id % 7 = 0` seed their `lang`

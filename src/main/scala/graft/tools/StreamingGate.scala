@@ -187,7 +187,8 @@ object StreamingGate {
     val rate = args.lift(1).map(_.toInt).getOrElse(100)
     val duration = args.lift(2).map(_.toInt).getOrElse(1200)
     val maxStateRows = 100000L
-    val spark = GoldSoak.session()
+    val spark = graft.GraftSession.local("graft-streaming-gate",
+      "spark.sql.streaming.numRecentProgressUpdates" -> "4096")
     val work = java.nio.file.Files.createTempDirectory("graft-streaming-gate")
       .toString
 

@@ -82,6 +82,26 @@ class BenchSpec extends AnyFunSuite {
     }
   }
 
+  test("named queries: only they are swept and warmed, and perf/bench_last.json is untouched") {
+    val names = SparkEntry.select(Seq("q01_", "q113_"))
+    assert(names == Seq("q01_pricing_summary", "q113_funnel"))
+    // warm-up covers exactly the selection, whatever the cache size
+    for (cache <- Seq("32768", "100", "0"))
+      assert(Bench.warmNames(names, fullSurface = false, cache) == names)
+    assert(Bench.artifactPaths(fullSurface = false) == Seq("target/bench.json"))
+  }
+
+  test("full surface: every query warmed when the codegen cache holds the surface") {
+    val all = SparkEntry.select(Nil)
+    assert(all == SparkEntry.queries.keys.toSeq.sorted)
+    assert(Bench.warmNames(all, fullSurface = true, "32768") == all)
+    // a small cache would thrash: warm the representative list instead
+    val small = Bench.warmNames(all, fullSurface = true, "100")
+    assert(small.nonEmpty && small.size < 20 && small.forall(SparkEntry.queries.contains))
+    assert(Bench.artifactPaths(fullSurface = true) ==
+      Seq("target/bench.json", "perf/bench_last.json"))
+  }
+
   test("runUntilDeadline skips an unaffordable query but still runs later cheap ones") {
     // anomaly order is not cost-ascending: a cheap steady query can
     // follow an unaffordable real regression — it must still get its
